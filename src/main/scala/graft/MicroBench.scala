@@ -7,13 +7,25 @@ import graft.text.{Shape, Tokenizer}
 
 /** Single-threaded phase attribution for the fused inference hot path.
   * No Spark — isolates pure-compute cost per stage so optimization targets
-  * the real bottleneck, not a guess. args = nDocs (default 100000).
+  * the real bottleneck, not a guess.
+  *
+  * Usage: `MicroBench [nDocs [batchSize]] [ref]`. The numeric arguments are
+  * read by position among the numeric arguments only: the first is the
+  * doc count (default 100000), the second the batch size (default 64).
+  * `ref` may stand anywhere and selects the production-dims dense pack
+  * (the honest FLOPs workload) instead of the rigged toy pack. So
+  * `MicroBench 20000 ref` and `MicroBench 20000 64 ref` are the same run.
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
-    val nDocs = if (args.nonEmpty) args(0).toLong else 100000L
-    // "ref" -> production-dims dense pack (the honest FLOPs workload)
-    val pack = if (args.contains("ref")) SynthPack.buildRandom() else SynthPack.build()
+    val (flags, nums) = args.partition(a => a.isEmpty || !a.forall(_.isDigit))
+    if (nums.length > 2 || flags.exists(_ != "ref")) {
+      System.err.println("usage: MicroBench [nDocs [batchSize]] [ref]")
+      sys.exit(2)
+    }
+    val nDocs = nums.headOption.map(_.toLong).getOrElse(100000L)
+    val batchSize = if (nums.length > 1) nums(1).toInt else 64
+    val pack = if (flags.contains("ref")) SynthPack.buildRandom() else SynthPack.build()
 
     // materialize sentences once (generation cost measured separately)
     var t0 = System.nanoTime()
@@ -66,7 +78,6 @@ object MicroBench {
     }
 
     // batched forwards on pre-tokenized input
-    val batchSize = if (args.length > 1) args(1).toInt else 64
     val batches = sents.grouped(batchSize).toArray
     def encodeBatch(batch: Array[SentRow]) = {
       val n = batch.length

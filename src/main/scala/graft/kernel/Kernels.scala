@@ -13,13 +13,17 @@ package graft.kernel
   */
 object Kernels {
 
-  /** out[m,n] = a[m,k] x b[k,n].
+  /** out[m,n] = a[m,k] x b[k,n], sequential mul-then-add order — the
+    * bit-exact kernel of the rigged sparse packs' Linear and biaffine
+    * weights, and of the biaffine h x kernel product at every density.
     *
     * NOTE: an explicit Vector-API twin of this sequential gemm was measured
     * SLOWER than this loop at the pipeline's shapes (biaffine n=32, rel
     * n=H*R; syntax stage 3.5s scalar vs 5.4s SIMD best-of-3) — C2 already
     * auto-vectorizes the inner j-loop and accumulates in place. SIMD
-    * dispatch is therefore only on the dense-conv path (gemmDense below).
+    * dispatch is therefore only on dense weights: [[gemmDense]] for the
+    * dense Linear and biaffine-rel kernels, [[convRows]] for dense CNN
+    * trunks.
     */
   def gemm(a: Array[Float], m: Int, k: Int, b: Array[Float], n: Int,
            out: Array[Float]): Unit = {
@@ -109,6 +113,77 @@ object Kernels {
     }
   }
 
+  /** Implicit-im2col convolution with a fused bias + relu + norm epilogue:
+    * one dense CNN trunk layer (see [[CNNEncoder]]).
+    *
+    * x holds token-major activation rows of C = conv.inDim channels with
+    * same-padding rows around every sentence. Output row i is centred on x
+    * row rows(i), so the im2col a-operand is read in place:
+    * a(i, p) = x((rows(i)-padding)*C + taps(p)), where taps(ch*K+t) =
+    * t*C + ch ([[Conv1d.tapOffsets]]); the b-operand is the conv's [C*K, F]
+    * weightT. Each element of out row oRows(i) (F wide) is
+    *   y = ascending-p fma chain of a*w from +0, then y + conv bias,
+    *   r = y > 0 ? y : +0,  (r - mean) * scale + norm bias
+    * — the arithmetic of an explicit im2col + [[gemmDense]], + bias, then
+    * [[BatchNorm1d.reluNormInPlace]], so the result is bit-identical to
+    * that chain. Only rows(0 until nRows) are computed; every other row of
+    * out is left as it is. Dispatches to the SIMD twin when available; the
+    * two paths produce identical bits (KernelSpec asserts it).
+    */
+  def convRows(layer: CNNEncoderLayer, x: Array[Float], rows: Array[Int], nRows: Int,
+               out: Array[Float], oRows: Array[Int]): Unit =
+    if (simdAvailable) VectorGemm.convRows(layer, x, rows, nRows, out, oRows)
+    else convRowsScalar(layer, x, rows, nRows, out, oRows)
+
+  def convRowsScalar(layer: CNNEncoderLayer, x: Array[Float], rows: Array[Int], nRows: Int,
+                     out: Array[Float], oRows: Array[Int]): Unit = {
+    val conv = layer.conv
+    val n = conv.filters
+    var i = 0
+    while (i < nRows) {
+      val oOff = oRows(i) * n
+      convRowSums(x, conv.tapOffsets, (rows(i) - conv.padding) * conv.inDim,
+        conv.weightT, n, 0, out, oOff)
+      finishRowScalar(layer, out, oOff, 0)
+      i += 1
+    }
+  }
+
+  /** Raw sums, columns j0 until n, of one [[convRows]] output row: the
+    * scalar twin, and the SIMD kernel's column tail. Accumulates in out
+    * row-major (as [[gemmDenseScalar]] does), so w is walked once in
+    * unit-stride runs; Math.fma is C2-intrinsified to the vfmadd the SIMD
+    * twin uses.
+    */
+  private[kernel] def convRowSums(x: Array[Float], taps: Array[Int], xOff: Int,
+                                  w: Array[Float], n: Int, j0: Int,
+                                  out: Array[Float], oOff: Int): Unit = {
+    java.util.Arrays.fill(out, oOff + j0, oOff + n, 0f)
+    var bOff = 0
+    var p = 0
+    while (p < taps.length) {
+      val av = x(xOff + taps(p))
+      var j = j0
+      while (j < n) { out(oOff + j) = Math.fma(av, w(bOff + j), out(oOff + j)); j += 1 }
+      bOff += n; p += 1
+    }
+  }
+
+  /** [[convRows]] epilogue over columns j0 until F of one row of raw sums. */
+  private[kernel] def finishRowScalar(layer: CNNEncoderLayer, out: Array[Float], off: Int,
+                                      j0: Int): Unit = {
+    val n = layer.conv.filters
+    val bias = layer.conv.bias
+    val norm = layer.norm
+    val (mean, scale, shiftN) = (norm.mean, norm.scale, norm.bias)
+    var j = j0
+    while (j < n) {
+      val y = out(off + j) + bias(j)
+      out(off + j) = ((if (y > 0f) y else 0f) - mean(j)) * scale(j) + shiftN(j)
+      j += 1
+    }
+  }
+
   def argmaxFirst(a: Array[Float], off: Int, len: Int): Int = {
     var best = 0
     var bv = a(off)
@@ -164,14 +239,25 @@ final case class Linear(weight: Array[Float], inDim: Int, outDim: Int,
   }
 }
 
-/** 1-D convolution via im2col + GEMM (exec/model.py:71-112).
+/** 1-D same-padding convolution (exec/model.py:71-112).
   * weight [filters, in, kernel] flattened as filters x (in*kernel);
-  * input [B, in, seq] -> output [B, filters, seq] (padding keeps seq).
+  * input [B, in, seq] -> output [B, filters, seq].
+  *
+  * Two physical forms, chosen per encoder by weight density ([[isDense]]):
+  *  - [[into]], direct tap accumulation — each nonzero (filter, channel,
+  *    tap) is a unit-stride saxpy over the sequence, zero taps skipped
+  *    entirely; per output element the products add in the reference's
+  *    im2col (channel-major, tap-minor) order, mul-then-add, bias last.
+  *    The form of the sparse rigged packs (~99% zeros); correct, if slow,
+  *    for any weights;
+  *  - dense trained/production weights have no per-layer form: a
+  *    [[CNNEncoder]] whose layers are all dense runs them through
+  *    [[Kernels.convRows]], an implicit-im2col GEMM against [[weightT]]
+  *    with the relu + norm + mask fused in.
   */
 final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
                         kernel: Int, bias: Array[Float], padding: Int)
     extends Serializable {
-
   // nonzero taps in (filter, channel, tap) ascending order — iterating only
   // these preserves the per-output-element accumulation order while
   // skipping the (dominant, for sparse weights) zero-weight scan
@@ -202,16 +288,15 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
 
   // fraction of nonzero weights decides the physical algorithm: rigged
   // synthetic packs are ~99% zeros (tap skipping wins); trained/production
-  // packs are fully dense (im2col+GEMM wins — the tap path's inner loops
-  // are seqLen-short and overhead-bound at 250k taps)
-  @transient private lazy val isDense: Boolean = {
+  // packs are fully dense (implicit-im2col GEMM wins — the tap path's
+  // inner loops are seqLen-short and overhead-bound at 250k taps)
+  @transient private[kernel] lazy val isDense: Boolean = {
     var nz = 0
     var i = 0
     while (i < weight.length) { if (weight(i) != 0f) nz += 1; i += 1 }
     nz * 4 > weight.length
   }
 
-  // weight [F, C*K] — GEMM a-operand, rows are filters
   def apply(input: Array[Float], batch: Int, seqLen: Int): Array[Float] = {
     val windows = seqLen + 2 * padding - kernel + 1
     val out = new Array[Float](batch * filters * windows)
@@ -219,30 +304,13 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
     out
   }
 
-  def into(input: Array[Float], batch: Int, seqLen: Int, out: Array[Float]): Unit =
-    into(input, batch, seqLen, out, null)
-
-  /** Convolution with two numerically-identical physical forms (per output
-    * element the products are added in the same (channel-major, tap-minor)
-    * order as the reference's im2col+GEMM, bias last):
-    *
-    *  - sparse weights: direct tap accumulation — each nonzero (filter,
-    *    channel, tap) is a unit-stride saxpy over the sequence; zero taps
-    *    skipped entirely (the rigged packs are ~99% zeros)
-    *  - dense weights: transposed im2col (each (c,tap) row is a shifted
-    *    arraycopy of the input channel) + GEMM weight[F,CK] x col[CK,S] —
-    *    long unit-stride inner loops, the right shape at production dims
-    *    (250k taps, where the tap path is loop-overhead-bound)
-    *
-    * out ≥ batch*filters*seqLen (requires the reference's same-pad config:
-    * windows == seqLen). ws (optional) provides the im2col scratch buffer.
+  /** Direct tap accumulation into out ≥ batch*filters*seqLen (requires the
+    * reference's same-pad config: windows == seqLen).
     */
-  def into(input: Array[Float], batch: Int, seqLen: Int, out: Array[Float],
-           ws: Workspace): Unit = {
+  def into(input: Array[Float], batch: Int, seqLen: Int, out: Array[Float]): Unit = {
     // the direct form assumes same-padding output (windows == seqLen)
     require(seqLen + 2 * padding - kernel + 1 == seqLen,
       s"Conv1d.into requires same padding (kernel=$kernel padding=$padding)")
-    if (isDense) { intoGemm(input, batch, seqLen, out, ws); return }
     val (nzF, nzCD, nzV) = nzTaps
     val n = nzF.length
     var b = 0
@@ -276,9 +344,14 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
     }
   }
 
-  // weight [F, C*K] transposed to [C*K, F] once — the GEMM b-operand
-  // (L2-resident at production dims: 990x256 floats = 1 MB)
-  @transient private lazy val weightT: Array[Float] = {
+  /** taps(ch*K+t) = t*C + ch: where im2col column ch*K+t of a window sits
+    * in token-major rows of C channels (the a-operand of Kernels.convRows) */
+  @transient private[kernel] lazy val tapOffsets: Array[Int] =
+    Array.tabulate(inDim * kernel)(p => (p % kernel) * inDim + p / kernel)
+
+  // weight [F, C*K] transposed to [C*K, F] once — the b-operand of
+  // Kernels.convRows (L2-resident at production dims: 990x256 floats = 1 MB)
+  @transient private[kernel] lazy val weightT: Array[Float] = {
     val ck = inDim * kernel
     val wt = new Array[Float](ck * filters)
     var f = 0
@@ -288,61 +361,6 @@ final case class Conv1d(weight: Array[Float], filters: Int, inDim: Int,
       f += 1
     }
     wt
-  }
-
-  /** dense path: one im2col+GEMM over ALL positions of the batch —
-    * col[B*S, C*K] x weightT[C*K, F] — so the GEMM inner loop runs over
-    * the F=256 filters (long, unit-stride, vectorizable) instead of the
-    * ~8-token sequence. Per output element the summation over p = c*K+t
-    * ascending matches the reference im2col accumulation order exactly.
-    */
-  private def intoGemm(input: Array[Float], batch: Int, seqLen: Int,
-                       out: Array[Float], ws: Workspace): Unit = {
-    val ck = inDim * kernel
-    val rows = batch * seqLen
-    val col = if (ws != null) ws.f(WS.COL, rows * ck) else new Array[Float](rows * ck)
-    val tmp = if (ws != null) ws.f(WS.PROD, rows * filters)
-              else new Array[Float](rows * filters)
-    // col[(b*S+s), c*K+t] = in[b, c, s+t-padding] (zeros at the edges);
-    // row-major build: writes sequential, reads nearly so
-    var b = 0
-    while (b < batch) {
-      var s = 0
-      while (s < seqLen) {
-        val rOff = (b * seqLen + s) * ck
-        var c = 0
-        while (c < inDim) {
-          val iOff = (b * inDim + c) * seqLen + s - padding
-          val cOff = rOff + c * kernel
-          var t = 0
-          while (t < kernel) {
-            val si = s + t - padding
-            col(cOff + t) = if (si >= 0 && si < seqLen) input(iOff + t) else 0f
-            t += 1
-          }
-          c += 1
-        }
-        s += 1
-      }
-      b += 1
-    }
-    Kernels.gemmDense(col, rows, ck, weightT, filters, tmp)
-    // tmp [B*S, F] (+bias) -> out [B, F, S]
-    b = 0
-    while (b < batch) {
-      var f = 0
-      while (f < filters) {
-        val bv = bias(f)
-        val oOff = (b * filters + f) * seqLen
-        var s = 0
-        while (s < seqLen) {
-          out(oOff + s) = tmp((b * seqLen + s) * filters + f) + bv
-          s += 1
-        }
-        f += 1
-      }
-      b += 1
-    }
   }
 }
 
@@ -358,7 +376,7 @@ final case class BatchNorm1d(weight: Array[Float], bias: Array[Float],
   // (x-m)*(w/s) differs from ((x-m)/s)*w by <=1 ulp; every golden is
   // pinned at the DECODED (argmax) level, same tolerance the round-1
   // im2col->sparse-tap conv rewrite already relied on.
-  @transient private lazy val scale: Array[Float] = {
+  @transient private[kernel] lazy val scale: Array[Float] = {
     val a = new Array[Float](weight.length)
     var c = 0
     while (c < weight.length) { a(c) = weight(c) / std(c); c += 1 }
@@ -494,13 +512,24 @@ final case class WordShapeEmbedding(word: NavecEmbedding, shape: Embedding)
 /** conv -> relu -> batchnorm (exec/model.py:257-268). */
 final case class CNNEncoderLayer(conv: Conv1d, norm: BatchNorm1d) extends Serializable
 
-/** Masked CNN encoder (exec/model.py:271-286): runs layers on [B,C,S],
-  * zeroing PAD positions after EVERY layer (parity-critical near
+/** Masked CNN encoder (exec/model.py:271-286): conv -> relu -> norm per
+  * layer, zeroing PAD positions after EVERY layer (parity-critical near
   * boundaries since conv kernels straddle the pad).
+  *
+  * Two physical forms with the same contract (see [[Conv1d]]): if every
+  * layer is dense, [[forwardDense]]; otherwise every layer takes the tap
+  * path ([[forwardTaps]]).
   */
 final case class CNNEncoder(layers: Seq[CNNEncoderLayer]) extends Serializable {
   val outDim: Int = layers.last.conv.filters
   @transient private lazy val layerArr: Array[CNNEncoderLayer] = layers.toArray
+  @transient private lazy val dense: Boolean = layerArr.forall(_.conv.isDense)
+  // zero rows on each side of a sentence in the dense trunk's layout
+  @transient private lazy val halo: Int = layerArr.map { l =>
+    require(l.conv.kernel == 2 * l.conv.padding + 1,
+      s"dense CNN trunk requires same padding (kernel=${l.conv.kernel} padding=${l.conv.padding})")
+    l.conv.padding
+  }.max
 
   /** input [B,S,E] row-major, padMask [B,S] (true = PAD) -> [B,S,outDim].
     * Allocating path (tests/oracle); the pipeline uses [[forwardT]] with a
@@ -520,7 +549,99 @@ final case class CNNEncoder(layers: Seq[CNNEncoderLayer]) extends Serializable {
     * forwardT call on the same workspace.
     */
   def forwardT(xT: Array[Float], batch: Int, seqLen: Int, embDim: Int,
-               padMask: Array[Boolean], ws: Workspace): Array[Float] = {
+               padMask: Array[Boolean], ws: Workspace): Array[Float] =
+    if (dense) forwardDense(xT, batch, seqLen, embDim, padMask, ws)
+    else forwardTaps(xT, batch, seqLen, embDim, padMask, ws)
+
+  /** Dense trunk: activations live token-major as [B, S+2H, C] with H zero
+    * halo rows on each side of every sentence (H = the widest layer
+    * padding); the halo rows are the convolution's same-padding. Each
+    * layer is one [[Kernels.convRows]] call over the real-token rows only
+    * (padMask false), which writes conv + bias + relu + norm straight into
+    * the next layer's rows; PAD and halo rows stay +0. The last layer
+    * writes [B,S,outDim] directly. Per element this is the arithmetic of
+    * im2col + gemmDense + reluNorm + mask, bit for bit; the first layer
+    * reads PAD tokens' embedding rows as window neighbours exactly as that
+    * chain does.
+    */
+  private def forwardDense(xT: Array[Float], batch: Int, seqLen: Int, embDim: Int,
+                           padMask: Array[Boolean], ws: Workspace): Array[Float] = {
+    val ls = layerArr
+    val h = halo
+    val sp = seqLen + 2 * h
+    // real-token rows: their centre row in the padded layout, and in [B,S]
+    val rows = ws.i(WS.CONV_ROWS, batch * seqLen)
+    val oRows = ws.i(WS.CONV_OUT_ROWS, batch * seqLen)
+    var nRows = 0
+    var b = 0
+    while (b < batch) {
+      var s = 0
+      while (s < seqLen) {
+        if (!padMask(b * seqLen + s)) {
+          rows(nRows) = b * sp + h + s
+          oRows(nRows) = b * seqLen + s
+          nRows += 1
+        }
+        s += 1
+      }
+      b += 1
+    }
+    // layer-0 input: every [B,E,S] column (PAD tokens included) as a row
+    var x = ws.f(WS.ENC_A, batch * sp * embDim)
+    b = 0
+    while (b < batch) {
+      zeroHalo(x, b, sp, seqLen, h, embDim)
+      var s = 0
+      while (s < seqLen) {
+        val o = (b * sp + h + s) * embDim
+        val iOff = b * embDim * seqLen + s
+        var c = 0
+        while (c < embDim) { x(o + c) = xT(iOff + c * seqLen); c += 1 }
+        s += 1
+      }
+      b += 1
+    }
+    var li = 0
+    while (li < ls.length) {
+      val f = ls(li).conv.filters
+      val last = li == ls.length - 1
+      val y =
+        if (last) ws.f(WS.ENC_OUT, batch * seqLen * f)
+        else ws.f(if (li % 2 == 0) WS.ENC_B else WS.ENC_A, batch * sp * f)
+      // rows the kernel does not write must read +0
+      b = 0
+      while (b < batch) {
+        if (!last) zeroHalo(y, b, sp, seqLen, h, f)
+        var s = 0
+        while (s < seqLen) {
+          if (padMask(b * seqLen + s)) {
+            val r = if (last) b * seqLen + s else b * sp + h + s
+            java.util.Arrays.fill(y, r * f, (r + 1) * f, 0f)
+          }
+          s += 1
+        }
+        b += 1
+      }
+      Kernels.convRows(ls(li), x, rows, nRows, y, if (last) oRows else rows)
+      x = y
+      li += 1
+    }
+    x
+  }
+
+  /** zero the halo rows of sentence b in a [B, sp, width] padded buffer */
+  private def zeroHalo(x: Array[Float], b: Int, sp: Int, seqLen: Int, halo: Int,
+                       width: Int): Unit = {
+    val r0 = b * sp
+    java.util.Arrays.fill(x, r0 * width, (r0 + halo) * width, 0f)
+    java.util.Arrays.fill(x, (r0 + halo + seqLen) * width, (r0 + sp) * width, 0f)
+  }
+
+  /** Tap path on [B,C,S]: conv, then relu + norm, then the mask, per layer;
+    * one transpose back to [B,S,C] at the end.
+    */
+  private def forwardTaps(xT: Array[Float], batch: Int, seqLen: Int, embDim: Int,
+                          padMask: Array[Boolean], ws: Workspace): Array[Float] = {
     val ls = layerArr
     var x = xT
     var channels = embDim
@@ -529,7 +650,7 @@ final case class CNNEncoder(layers: Seq[CNNEncoderLayer]) extends Serializable {
       val layer = ls(li)
       val f = layer.conv.filters
       val y = ws.f(if (li % 2 == 0) WS.ENC_A else WS.ENC_B, batch * f * seqLen)
-      layer.conv.into(x, batch, seqLen, y, ws)
+      layer.conv.into(x, batch, seqLen, y)
       layer.norm.reluNormInPlace(y, batch, f, seqLen)
       // zero masked positions after EVERY layer (exec/model.py:277-286)
       var bb = 0

@@ -42,25 +42,23 @@ object WS {
   // float slots
   val EMB = 0        // [B,S,E] shared word+shape embedding (live across all 3 trunks)
   val XT = 1         // [B,E,S] transposed emb (live across all 3 trunks)
-  val ENC_A = 2      // CNN layer ping
-  val ENC_B = 3      // CNN layer pong
-  val COL = 4        // conv im2col
-  val PROD = 5       // conv GEMM product
-  val ENC_OUT = 6    // [B,S,C] encoder output (live until the model's heads consume it)
-  val NER_OUT = 7    // NER emissions (live until CRF decode)
-  val MORPH_OUT = 8  // morph logits (live until assembly — syntax must not touch)
-  val SH_ROOT = 9    // syntax withRoot
-  val SH_H = 10      // FF head out (head stage, then reused by rel stage)
-  val SH_T = 11      // FF tail out
-  val SH_HK = 12     // biaffine h×kernel product
-  val SH_HB = 13     // per-batch h block
-  val HEAD_SC = 14   // arc scores [B,S,S+1]
-  val GATH = 15      // gathered head states
-  val REL_SC = 16    // rel scores [B,S,R]
-  val CRF_SCORE = 17 // viterbi running scores [B,T]
-  val CRF_CAND = 18  // viterbi candidate scores [T]
-  val CRF_NS = 19    // viterbi new scores [T]
-  val F_SLOTS = 20
+  val ENC_A = 2      // CNN layer ping ([B,C,S]; dense trunk: padded [B,S+2H,C])
+  val ENC_B = 3      // CNN layer pong (same layouts as ENC_A)
+  val ENC_OUT = 4    // [B,S,C] encoder output (live until the model's heads consume it)
+  val NER_OUT = 5    // NER emissions (live until CRF decode)
+  val MORPH_OUT = 6  // morph logits (live until assembly — syntax must not touch)
+  val SH_ROOT = 7    // syntax withRoot
+  val SH_H = 8       // FF head out (head stage, then reused by rel stage)
+  val SH_T = 9       // FF tail out
+  val SH_HK = 10     // biaffine h×kernel product
+  val SH_HB = 11     // per-batch h block
+  val HEAD_SC = 12   // arc scores [B,S,S+1]
+  val GATH = 13      // gathered head states
+  val REL_SC = 14    // rel scores [B,S,R]
+  val CRF_SCORE = 15 // viterbi running scores [B,T]
+  val CRF_CAND = 16  // viterbi candidate scores [T]
+  val CRF_NS = 17    // viterbi new scores [T]
+  val F_SLOTS = 18
 
   // int slots
   val WORD_IDS = 0
@@ -68,7 +66,9 @@ object WS {
   val CRF_HIST = 2   // [(S-1)*B*T] backpointers
   val HEAD_IDS = 3
   val REL_IDS = 4
-  val I_SLOTS = 5
+  val CONV_ROWS = 5     // dense trunk: real-token rows in the padded layout
+  val CONV_OUT_ROWS = 6 // dense trunk: the same rows in [B,S]
+  val I_SLOTS = 7
 
   // boolean slots
   val PAD_MASK = 0

@@ -35,19 +35,12 @@ object Docs {
     // waves at 61% occupancy — wave occupancy, not compute, capped the
     // 25k-doc reference-dims leg's 8->32 wall scaling at ~0.61 (guide
     // §2.5 stragglers; a real scheduler over millions of splits never
-    // sees a 1.2-wave layout). Bounds: at least one task per core (tiny
-    // inputs), at most 256 tasks (local sandbox cap ≈ 8 waves on 32
-    // cores, itself a multiple of every leg's core count; a real 100 TB
-    // input brings millions of data-sized splits and no cap).
+    // sees a 1.2-wave layout). Bounds: see [[sliceCount]].
     // graft.gen.slices overrides the count for granularity probes — unlike
     // a repartition() it keeps the generate->parse chain one fused
     // object-level stage (no encoder round-trip, no exchange)
-    val slices = sys.props.get("graft.gen.slices").map(_.toInt).getOrElse {
-      val p = spark.sparkContext.defaultParallelism
-      val byData = math.min(nDocs / 640, 256L)
-      val waves = math.max(1L, math.round(byData.toDouble / p))
-      math.min(math.max(p.toLong, waves * p), 256L).toInt
-    }
+    val slices = sys.props.get("graft.gen.slices").map(_.toInt)
+      .getOrElse(sliceCount(nDocs, spark.sparkContext.defaultParallelism))
     spark.range(0, nDocs, 1, slices).as[Long].map { id =>
       // index straight off the array-backed spans — no intermediate
       // mapped collection before the SpanT array
@@ -59,6 +52,21 @@ object Docs {
       }
       InterleavedDoc(s"d$id", arr)
     }
+  }
+
+  /** Wave-aligned slice count for `nDocs` generated docs on `p` cores:
+    * ~640 docs per slice, rounded to a whole number of waves (a multiple
+    * of p). Bounds: at least one task per core (tiny inputs), at most the
+    * 256-task local cap floored to a whole wave, max(p, (256/p)*p) — a cap
+    * of exactly 256 would leave a fractional last wave on core counts that
+    * do not divide it (12, 24, 48). A real 100 TB input brings millions of
+    * data-sized splits and no cap.
+    */
+  def sliceCount(nDocs: Long, p: Int): Int = {
+    val cap = math.max(p, (256 / p) * p).toLong
+    val byData = math.min(nDocs / 640, 256L)
+    val waves = math.max(1L, math.round(byData.toDouble / p))
+    math.min(waves * p, cap).toInt
   }
 
   /** Russian corpus for a test-data dir (row count scales with sf). */

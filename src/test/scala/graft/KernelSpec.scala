@@ -88,7 +88,7 @@ class KernelSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(1f, 1f, 0f, 0f, 0f, 0f, 1f, 0f, 0f, 1f, 1f, 1f))
   }
 
-  test("Conv1d dense-GEMM path and sparse-tap path both equal naive conv") {
+  test("Conv1d tap path equals naive conv bit for bit (dense and sparse weights)") {
     val rnd = new java.util.Random(3)
     val (bN, fN, cN, kN, sN) = (2, 5, 7, 3, 9)
     def naive(w: Array[Float], bias: Array[Float], in: Array[Float]): Array[Float] = {
@@ -105,21 +105,122 @@ class KernelSpec extends AnyFunSuite {
     }
     val in = Array.fill(bN * cN * sN)(rnd.nextFloat() * 2 - 1)
     val bias = Array.fill(fN)(rnd.nextFloat())
-    // dense: every weight nonzero -> GEMM path (4-way-unrolled fixed
-    // accumulation order — equal to the sequential naive sum only within
-    // fp tolerance, exactly like numpy-vs-BLAS)
+    // Conv1d.into is the tap path at every density (dense trunks run
+    // through Kernels.convRows inside CNNEncoder instead): sequential
+    // mul-then-add, so it equals the naive sum exactly on dense weights too
     val wDense = Array.fill(fN * cN * kN)(rnd.nextFloat() * 2 - 1)
-    val gotDense = Conv1d(wDense, fN, cN, kN, bias, 1)(in, bN, sN)
-    val wantDense = naive(wDense, bias, in)
-    gotDense.zip(wantDense).foreach { case (g, w) =>
-      assert(math.abs(g - w) <= 1e-4f * (1f + math.abs(w)), s"$g vs $w")
-    }
-    // dense path is still deterministic: two runs bit-identical
-    assert(gotDense.toSeq == Conv1d(wDense, fN, cN, kN, bias, 1)(in, bN, sN).toSeq)
-    // sparse: ~85% zeros -> tap path, bit-exact sequential order
+    assert(Conv1d(wDense, fN, cN, kN, bias, 1)(in, bN, sN).toSeq == naive(wDense, bias, in).toSeq)
+    // sparse: ~85% zeros, zero taps skipped
     val wSparse = wDense.map(v => if (rnd.nextFloat() < 0.85f) 0f else v)
     assert(Conv1d(wSparse, fN, cN, kN, bias, 1)(in, bN, sN).toSeq ==
       naive(wSparse, bias, in).toSeq)
+  }
+
+  /** Dense random trunk: every weight nonzero, so CNNEncoder takes the
+    * implicit-im2col path; norm with non-trivial mean/scale/shift. */
+  private def denseTrunk(rnd: java.util.Random, embDim: Int, dims: Seq[Int]): CNNEncoder = {
+    def arr(n: Int, lo: Float, hi: Float) = Array.fill(n)(lo + rnd.nextFloat() * (hi - lo))
+    var in = embDim
+    CNNEncoder(dims.map { f =>
+      val conv = Conv1d(arr(f * in * 3, -0.5f, 0.5f).map(v => if (v == 0f) 0.25f else v),
+        f, in, 3, arr(f, -0.3f, 0.3f), 1)
+      val norm = BatchNorm1d(arr(f, 0.5f, 1.5f), arr(f, -0.2f, 0.2f), arr(f, -0.3f, 0.3f),
+        arr(f, 0.5f, 2f))
+      in = f
+      CNNEncoderLayer(conv, norm)
+    })
+  }
+
+  /** The explicit chain the dense trunk replaces: per layer an im2col
+    * [B*S, C*K] copy (zeros past the sentence edges), Kernels.gemmDense
+    * against the transposed weight, + bias, reluNormInPlace on [B,F,S],
+    * then PAD rows zeroed. x [B,S,E] -> [B,S,outDim]. */
+  private def refDenseTrunk(enc: CNNEncoder, x: Array[Float], bN: Int, sN: Int,
+                            eN: Int, mask: Array[Boolean]): Array[Float] = {
+    var cur = x
+    var c = eN
+    for (layer <- enc.layers) {
+      val conv = layer.conv
+      val (f, k, pad) = (conv.filters, conv.kernel, conv.padding)
+      val ck = c * k
+      val col = new Array[Float](bN * sN * ck)
+      for (b <- 0 until bN; s <- 0 until sN; ch <- 0 until c; t <- 0 until k) {
+        val si = s + t - pad
+        col((b * sN + s) * ck + ch * k + t) =
+          if (si >= 0 && si < sN) cur((b * sN + si) * c + ch) else 0f
+      }
+      val wT = new Array[Float](ck * f)
+      for (j <- 0 until f; p <- 0 until ck) wT(p * f + j) = conv.weight(j * ck + p)
+      val prod = new Array[Float](bN * sN * f)
+      Kernels.gemmDense(col, bN * sN, ck, wT, f, prod)
+      val y = new Array[Float](bN * f * sN)
+      for (b <- 0 until bN; s <- 0 until sN; j <- 0 until f)
+        y((b * f + j) * sN + s) = prod((b * sN + s) * f + j) + conv.bias(j)
+      layer.norm.reluNormInPlace(y, bN, f, sN)
+      val next = new Array[Float](bN * sN * f)
+      for (b <- 0 until bN; s <- 0 until sN; j <- 0 until f)
+        next((b * sN + s) * f + j) = if (mask(b * sN + s)) 0f else y((b * f + j) * sN + s)
+      cur = next
+      c = f
+    }
+    cur
+  }
+
+  test("dense CNN trunk (implicit im2col) is bitwise equal to im2col + gemmDense + reluNorm + mask") {
+    val rnd = new java.util.Random(21)
+    // F covers a lone vector (16), one 4-vector tile (64), a scalar column
+    // tail (65), four tiles (256) and tile + vector + scalar tails (83)
+    val trunks = Seq((37, Seq(65, 16)), (24, Seq(256, 64)), (19, Seq(83, 16, 65)))
+    // (B, S, sentence lengths; -1 marks a masked middle position)
+    val batches = Seq(
+      (1, 1, Seq(Seq(1))),                       // S=1, B=1
+      (1, 2, Seq(Seq(1, 1))),                    // S=2, B=1
+      (3, 2, Seq(Seq(1, 0), Seq(0, 0), Seq(1, 1))), // fully padded sentence
+      (2, 7, Seq(Seq(1, 1, 1, 0, 1, 1, 0), Seq(1, 1, 1, 1, 1, 0, 0))), // 9 rows, masked middle
+      (5, 9, Seq.fill(5)(Seq.empty[Int])))       // random lengths
+    for ((eN, dims) <- trunks) {
+      val enc = denseTrunk(rnd, eN, dims)
+      val ws = new Workspace // reused: stale rows from a bigger batch must not leak
+      for ((bN, sN, spec) <- batches.reverse ++ batches) {
+        val mask = new Array[Boolean](bN * sN)
+        for (b <- 0 until bN) {
+          val len = 1 + rnd.nextInt(sN)
+          for (s <- 0 until sN)
+            mask(b * sN + s) = if (spec(b).nonEmpty) spec(b)(s) == 0 else s >= len
+        }
+        // PAD tokens carry nonzero embeddings: layer 1 reads them as window
+        // neighbours before any masking, exactly as the im2col chain does
+        val x = Array.fill(bN * sN * eN)(rnd.nextFloat() * 2 - 1)
+        val want = refDenseTrunk(enc, x, bN, sN, eN, mask)
+        val xT = new Array[Float](bN * eN * sN)
+        CNNEncoder.transposeInto(x, bN, sN, eN, xT)
+        val got = java.util.Arrays.copyOf(
+          enc.forwardT(xT, bN, sN, eN, mask, ws), bN * sN * enc.outDim)
+        assert(java.util.Arrays.equals(got, want), s"E=$eN F=$dims B=$bN S=$sN")
+        assert(java.util.Arrays.equals(enc(x, bN, sN, eN, mask), want))
+      }
+    }
+  }
+
+  test("SIMD implicit-im2col conv is bit-identical to its scalar twin") {
+    assert(Kernels.simdAvailable, "vector module missing in test JVM")
+    val rnd = new java.util.Random(13)
+    def arr(n: Int) = Array.fill(n)(rnd.nextFloat() * 2 - 1)
+    for (c <- Seq(5, 33, 330); n <- Seq(3, 16, 64, 65, 83, 256); nRows <- Seq(1, 2, 3, 4, 7, 13)) {
+      val layer = CNNEncoderLayer(Conv1d(arr(n * c * 3), n, c, 3, arr(n), 1),
+        BatchNorm1d(arr(n), arr(n), arr(n), arr(n).map(v => 1.5f + v)))
+      val xRows = nRows + 6
+      val x = arr(xRows * c)
+      // arbitrary (non-contiguous) centre rows, written in reverse order
+      val rows = Array.tabulate(nRows)(i => 1 + (i * 5) % (xRows - 2))
+      val oRows = Array.tabulate(nRows)(i => nRows - 1 - i)
+      val o1 = Array.fill((nRows + 1) * n)(Float.NaN)
+      val o2 = Array.fill((nRows + 1) * n)(Float.NaN)
+      VectorGemm.convRows(layer, x, rows, nRows, o1, oRows)
+      Kernels.convRowsScalar(layer, x, rows, nRows, o2, oRows)
+      assert(java.util.Arrays.equals(o1, o2), s"mismatch at c=$c n=$n rows=$nRows")
+      assert(o2.take(nRows * n).forall(v => !v.isNaN)) // every real row written
+    }
   }
 
   test("SIMD gemmDense is bit-identical to the scalar kernel (all tail shapes)") {

@@ -90,6 +90,18 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("russianDocs: slice count is whole waves under the 256-task cap") {
+    for (p <- Seq(4, 12, 24, 48); nDocs <- Seq(0L, 639L, 5000L, 25000L, 100000L, 1L << 40)) {
+      val n = Docs.sliceCount(nDocs, p)
+      assert(n % p == 0 && n >= p && n <= 256, s"p=$p nDocs=$nDocs -> $n")
+    }
+    assert(Docs.sliceCount(1L << 40, 12) == 252)
+    assert(Docs.sliceCount(1L << 40, 48) == 240)
+    assert(Docs.sliceCount(1L << 40, 4) == 256)
+    assert(Docs.sliceCount(25000L, 24) == 48) // 39 by data -> 2 waves
+    assert(Docs.sliceCount(100L, 24) == 24)   // at least one task per core
+  }
+
   test("triples equal golden planted triples exactly") {
     import spark.implicits._
     val nDocs = 50L
